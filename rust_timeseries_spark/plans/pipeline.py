@@ -49,26 +49,21 @@ class RollupPipeline:
         # count() action
         obs = Observation()
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-        days = self.store.merge_increment(full_raw, batch)
+        day_rows = self.store.merge_increment(full_raw, batch)
         n_batch = int(obs.get["n_rows"])
-        t1h = self.store.read_tier("1h")
-        day_rows = [
-            (d, n)
-            for d, n in (
-                t1h.withColumn("d", F.col("bucket_ts") - F.pmod(F.col("bucket_ts"), F.lit(86400)))
-                .where(F.col("d").isin(days))
-                .groupBy("d")
-                .count()
-                .collect()
-            )
-        ]
-        self.meta.record_lineage(run_id, "1h", day_rows)
-        self._advance_ewma_watermarks(t1h, dirty_days=days)
-        wall = time.perf_counter() - t0
+        t1 = time.perf_counter()
+        self.meta.record_lineage(run_id, "1h", list(day_rows.items()))
+        t2 = time.perf_counter()
+        self._advance_ewma_watermarks(self.store.read_tier("1h"), dirty_days=list(day_rows))
+        t3 = time.perf_counter()
+        wall = t3 - t0
         metrics = {
             "n_batch_rows": float(n_batch),
-            "n_dirty_days": float(len(days)),
+            "n_dirty_days": float(len(day_rows)),
             "wall_seconds": wall,
+            "merge_s": t1 - t0,
+            "lineage_s": t2 - t1,
+            "watermark_s": t3 - t2,
             "rows_per_sec": (n_batch / wall) if wall > 0 else 0.0,
         }
         self.meta.record_metrics(run_id, metrics)
@@ -98,19 +93,17 @@ class RollupPipeline:
         pinned by test_tiers), so the per-increment cost is O(new data)
         instead of O(total history). Late data that re-dirties a day at
         or before any watermark invalidates the downstream ψ path, so
-        that case (and the bootstrap) falls back to the full recursion."""
-        wm = self.meta.watermarks(self.keys)
-        have_wm = wm.limit(1).count() > 0
-        incremental = have_wm and dirty_days is not None and len(dirty_days) > 0
-        if incremental:
-            max_wm_day = wm.agg(
-                F.max(F.col("last_bucket_ts") - F.pmod(F.col("last_bucket_ts"), F.lit(86400)))
-            ).collect()[0][0]
-            incremental = min(dirty_days) > max_wm_day
-        if not incremental:
-            source = self.ewma_full(t1h)
-        else:
-            source = self.ewma_continue(t1h)
+        that case (and the bootstrap) falls back to the full recursion.
+
+        The one-row-per-key watermark table is collected once; the
+        choice of path and the carry-over of keys without fresh buckets
+        happen on the driver, and the new table is saved from the
+        collected rows."""
+        wm = self.meta.watermarks(self.keys).collect()
+        incremental = bool(wm) and bool(dirty_days) and min(dirty_days) > max(
+            r["last_bucket_ts"] - r["last_bucket_ts"] % 86400 for r in wm
+        )
+        source = self.ewma_continue(t1h) if incremental else self.ewma_full(t1h)
         w_latest = source.withColumn(
             "_rn",
             F.row_number().over(Window.partitionBy(*self.keys).orderBy(F.desc("t"))),
@@ -118,20 +111,19 @@ class RollupPipeline:
         # recursion state = last ψ and last observation; the seeded
         # kernel's first step then computes ψ_{T+1} = α·x_T + β·ψ_T itself
         rows = w_latest.select(
-            *self.keys,
+            *[F.col(k).cast("string") for k in self.keys],
             F.lit("1h").alias("tier"),
             F.col("t").alias("last_bucket_ts"),
             F.array(F.col("psi")).alias("psi_lags"),
             F.array(F.col("v")).alias("dur_lags"),
-        )
+        ).collect()
         if incremental:
             # keys with no fresh buckets keep their previous state — the
-            # overwrite must not drop them. (save_watermarks stages
-            # through watermark_new before replacing the table, so this
-            # plan's read of the old table materializes safely first.)
-            untouched = wm.join(rows.select(*self.keys), self.keys, "left_anti")
-            rows = untouched.select(*rows.columns).unionByName(rows)
-        self.meta.save_watermarks(rows)
+            # overwrite must not drop them
+            n = len(self.keys)
+            advanced = {tuple(r[:n]) for r in rows}
+            rows += [r for r in wm if tuple(r[:n]) not in advanced]
+        self.meta.save_watermarks(self.keys, rows)
 
     def ewma_continue(self, t1h_new: DataFrame) -> DataFrame:
         """EWMA over buckets strictly after each key's watermark, seeded

@@ -27,12 +27,18 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import rollup
 
 _PARTITION_COLS = {"1m": ["bucket_day"], "1h": ["bucket_day"], "1d": []}
+
+
+def _day_seconds(df: DataFrame, col: str) -> Column:
+    """Epoch-second UTC day of a timestamp or epoch-second column."""
+    es = rollup.epoch_seconds(F.col(col), dict(df.dtypes)[col])
+    return es - F.pmod(es, F.lit(86400))
 
 
 class TierStore:
@@ -100,45 +106,59 @@ class TierStore:
     # -- incremental maintenance --------------------------------------------
 
     def affected_days(self, batch_df: DataFrame) -> list[int]:
-        dtype = dict(batch_df.dtypes)[self.ts_col]
-        es = rollup.epoch_seconds(F.col(self.ts_col), dtype)
-        day = es - F.pmod(es, F.lit(86400))
+        day = _day_seconds(batch_df, self.ts_col)
         return sorted(r[0] for r in batch_df.select(day.alias("d")).distinct().collect())
 
-    def merge_increment(self, full_raw_df: DataFrame, batch_df: DataFrame) -> list[int]:
+    def merge_increment(self, full_raw_df: DataFrame, batch_df: DataFrame) -> dict[int, int]:
         """Recompute the day partitions touched by ``batch_df`` from the
         raw source of truth and atomically replace them (idempotent
         MERGE-equivalent keyed on (keys, bucket_ts)). Returns the days
-        replaced.
+        replaced, in order, each mapped to its number of 1h rows.
+
+        The dirty days' 1m rollup is computed once and held in memory
+        for the call: both the 1m and the 1h partitions are written from
+        it, and the 1d tier becomes the old 1d's other days plus a fold
+        of the dirty 1h, so no tier is re-read in full. The 1d rows of
+        days already expired from 1h are kept.
 
         At scale ``full_raw_df`` is the Iceberg token table: partition
         pruning reduces the recompute scan to exactly the dirty days.
         """
         days = self.affected_days(batch_df)
         if not days:
-            return days
-        dtype = dict(full_raw_df.dtypes)[self.ts_col]
-        es = rollup.epoch_seconds(F.col(self.ts_col), dtype)
-        day = es - F.pmod(es, F.lit(86400))
-        dirty_raw = full_raw_df.where(day.isin(days))
-        tiers = self.cascade(dirty_raw)
-        for tier in ("1m", "1h"):
-            out = self._with_day(tiers[tier])
-            # dynamic partition overwrite: only the dirty bucket_day dirs.
-            # Clustered by day first — same one-file-per-day write shape
-            # as materialize_full (guide §6)
-            out = out.repartition("bucket_day")
-            out.write.mode("overwrite").partitionBy("bucket_day").parquet(self.tier_path(tier))
-        # 1d tier is unpartitioned-by-day: rebuild it from the 1h tier
-        # (cheap — |sources| × |days| rows)
-        t1d = rollup.fold_up(self.read_tier("1h"), "1d", self.keys, epoch=self.epoch)
-        t1d.write.mode("overwrite").parquet(self.tier_path("1d") + "_tmp")
-        tmp = self.tier_path("1d") + "_tmp"
-        final = self.tier_path("1d")
+            return {}
+        dirty_raw = full_raw_df.where(_day_seconds(full_raw_df, self.ts_col).isin(days))
+        t1m = rollup.rollup_raw(
+            dirty_raw, "1m", self.keys, self.ts_col, self.value_col, epoch=self.epoch
+        ).persist()
+        try:
+            t1h = rollup.fold_up(t1m, "1h", self.keys, epoch=self.epoch)
+            # the per-day 1h row counts ride the 1h write: no extra job
+            obs = Observation()
+            day = _day_seconds(t1h, "bucket_ts")
+            counted = t1h.observe(obs, *[F.count_if(day == d).alias(str(d)) for d in days])
+            for tier, df in (("1m", t1m), ("1h", counted)):
+                # dynamic partition overwrite: only the dirty bucket_day
+                # dirs. Clustered by day first — same one-file-per-day
+                # write shape as materialize_full (guide §6)
+                out = self._with_day(df).repartition("bucket_day")
+                out.write.mode("overwrite").partitionBy("bucket_day").parquet(self.tier_path(tier))
+            counts = obs.get
+            day_rows = {d: counts[str(d)] for d in days if counts[str(d)]}
+            t1d = rollup.fold_up(t1h, "1d", self.keys, epoch=self.epoch)
+            final = self.tier_path("1d")
+            if os.path.exists(final):
+                old = self.spark.read.schema(t1d.schema).parquet(final)
+                t1d = old.where(~_day_seconds(old, "bucket_ts").isin(list(day_rows))).unionByName(t1d)
+            tmp = final + "_tmp"
+            # one file: the 1d tier holds only |keys| × |days| rows
+            t1d.coalesce(1).write.mode("overwrite").parquet(tmp)
+        finally:
+            t1m.unpersist(blocking=True)
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(tmp, final)
-        return days
+        return day_rows
 
     # -- retention & compaction ----------------------------------------------
 

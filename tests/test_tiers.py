@@ -6,6 +6,10 @@ from rust_timeseries_spark import datagen
 from rust_timeseries_spark.plans.pipeline import RollupPipeline
 from rust_timeseries_spark.plans.tiers import TierStore
 
+#: jobs the append ``run_increment`` below may launch (32 before the
+#: dirty days' cascade was shared and the meta tables got fixed schemas)
+JOBS_PER_APPEND = 21
+
 
 @pytest.fixture()
 def raw(spark):
@@ -28,8 +32,14 @@ def test_materialize_and_read_roundtrip(spark, raw, tmp_path):
         assert got == exp
 
 
-def test_incremental_equals_full(spark, raw, tmp_path):
-    store = TierStore(spark, str(tmp_path / "tiers"))
+def _raw_day(raw):
+    from rust_timeseries_spark.operators.rollup import epoch_seconds
+
+    es = epoch_seconds(F.col("ts"), dict(raw.dtypes)["ts"])
+    return es - F.pmod(es, F.lit(86400))
+
+
+def _check_incremental_equals_full(store, raw):
     # day-based split: first materialize the early part, then merge the rest
     cut = raw.approxQuantile("n_tok", [0.5], 0)[0]  # arbitrary row split
     part1 = raw.where(F.col("n_tok") <= cut)
@@ -40,6 +50,30 @@ def test_incremental_equals_full(spark, raw, tmp_path):
         got = _tier_dict(store.read_tier(tier))
         exp = _tier_dict(store.cascade(raw)[tier])
         assert got == exp
+
+
+def test_incremental_equals_full(spark, raw, tmp_path):
+    _check_incremental_equals_full(TierStore(spark, str(tmp_path / "tiers")), raw)
+
+
+def test_incremental_equals_full_timestamp_store(spark, raw, tmp_path):
+    # epoch=False: bucket_ts is a timestamp, and the 1d rebuild's day
+    # filter must still match the replaced day partitions
+    _check_incremental_equals_full(TierStore(spark, str(tmp_path / "tiers_ts"), epoch=False), raw)
+
+
+def test_merge_keeps_1d_rows_of_expired_days(spark, raw, tmp_path):
+    # the 1d tier is rebuilt from its own untouched days plus the dirty
+    # days, not from the 1h tier, so expiring 1h history keeps the 1d
+    # rows of those days through later merges
+    store = TierStore(spark, str(tmp_path / "tiers"))
+    store.materialize_full(raw)
+    day = _raw_day(raw)
+    days = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())
+    assert store.expire("1h", days[2]) == 2
+    store.merge_increment(raw, raw.where(day == days[-1]))
+    assert _tier_dict(store.read_tier("1d")) == _tier_dict(store.cascade(raw)["1d"])
+    assert store.read_tier("1h").agg(F.min("bucket_ts")).collect()[0][0] >= days[2]
 
 
 def test_merge_is_idempotent(spark, raw, tmp_path):
@@ -281,3 +315,40 @@ def test_write_clustered_layout(spark, tmp_path):
         ranges.sort()
         for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
             assert a_hi <= b_lo, (a_hi, b_lo)
+
+
+@pytest.fixture()
+def append_increment(spark, raw, tmp_path):
+    """A pipeline bootstrapped on the first four days, then one append
+    ``run_increment`` over the rest run under its own job group:
+    ``(pipe, returned metrics, job ids of the append)``."""
+    pipe = RollupPipeline(spark, str(tmp_path / "p"))
+    day = _raw_day(raw)
+    cut_day = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())[4]
+    early = raw.where(day < cut_day)
+    pipe.run_increment(early, early, run_id="r1")
+    sc = spark.sparkContext
+    group = f"append-{tmp_path.name}"
+    sc.setJobGroup(group, "append run_increment")
+    try:
+        m = pipe.run_increment(raw, raw.where(day >= cut_day), run_id="r2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return pipe, m, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_increment_job_count(append_increment):
+    # a re-scan or re-read that creeps back into run_increment (a second
+    # raw cascade, a whole-tier read, a schema-inference job) fails here
+    _, _, jobs = append_increment
+    assert len(jobs) <= JOBS_PER_APPEND, len(jobs)
+
+
+def test_increment_phase_metrics(append_increment):
+    pipe, m, _ = append_increment
+    phases = ("merge_s", "lineage_s", "watermark_s")
+    assert sum(m[k] for k in phases) <= m["wall_seconds"]
+    stored = {r["name"]: r["value"] for r in pipe.meta.metrics().where(F.col("run_id") == "r2").collect()}
+    assert {"wall_seconds", *phases} <= set(stored)
+    assert all(stored[k] >= 0 for k in phases)
+    assert sum(stored[k] for k in phases) <= stored["wall_seconds"]
