@@ -64,12 +64,38 @@ from rust_timeseries_spark.operators import multimodal  # noqa: E402
 from rust_timeseries_spark.operators import graph as graph_ops  # noqa: E402
 
 
+# Declared schemas of the driver testdata tables. Reads pass them to the
+# reader, so building a query launches no schema-inference job; the
+# declared and the inferred schema of every shipped table are pinned
+# equal by tests/test_entry.py (a missing column would read as nulls).
+TABLE_SCHEMAS = {
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+              "value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, "
+                "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+                "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double, "
+              "o_orderdate timestamp_ntz, o_orderpriority string",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, "
+                "c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "region": "r_regionkey int, r_name string",
+}
+
+
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _table(spark, sf_dir, "events")
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return _table(spark, sf_dir, "documents")
 
 
 def _documents_par(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +115,7 @@ def _documents_par(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return _table(spark, sf_dir, "embeddings")
 
 
 def _r2(c):  # sums of 2-decimal inputs: exact on the 0.01 grid
@@ -422,22 +448,22 @@ def _q_streaming_rollup_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             reader_options={"maxFilesPerTrigger": "1"},
         )
 
+        # the store starts as an empty directory and is always read with
+        # the stream's output schema: no schema-inference job per
+        # micro-batch, and zero micro-batches leave an empty result
+        _os.makedirs(store)
+
         def merge_fn(batch_df, batch_id):
             # keyed MERGE: updated buckets replace their previous rows
             # (tiers.py bucket-replace semantics); write-tmp-then-swap
             # because parquet cannot be overwritten while being read
-            if _os.path.exists(store):
-                cur = batch_df.sparkSession.read.parquet(store)
-                keep = cur.join(
-                    batch_df.select("event_type", "bucket_ts"),
-                    ["event_type", "bucket_ts"], "left_anti",
-                )
-                out = keep.unionByName(batch_df)
-            else:
-                out = batch_df
-            out.write.mode("overwrite").parquet(store + "_tmp")
-            if _os.path.exists(store):
-                shutil.rmtree(store)
+            cur = batch_df.sparkSession.read.schema(agg.schema).parquet(store)
+            keep = cur.join(
+                batch_df.select("event_type", "bucket_ts"),
+                ["event_type", "bucket_ts"], "left_anti",
+            )
+            keep.unionByName(batch_df).write.mode("overwrite").parquet(store + "_tmp")
+            shutil.rmtree(store)
             _os.rename(store + "_tmp", store)
 
         q = rollup_stream.run_incremental(agg, ckpt, merge_fn)
@@ -446,7 +472,7 @@ def _q_streaming_rollup_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError("streaming_rollup_late did not drain within 600s")
         # eager checkpoint: materialized before the store dir is
         # deleted, no driver row roundtrip (see streaming_rollup_1m)
-        out = spark.read.parquet(store).localCheckpoint()
+        out = spark.read.schema(agg.schema).parquet(store).localCheckpoint()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     es = rollup.epoch_seconds(F.col("bucket_ts"), dict(out.dtypes)["bucket_ts"])
@@ -960,6 +986,7 @@ def _q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from rust_timeseries_spark import streaming
     from rust_timeseries_spark.streaming import ewma_stream
 
     t1h = rollup.rollup_raw(_events(spark, sf_dir), "1h", ["event_type"], "ts", "value", epoch=True)
@@ -968,7 +995,7 @@ def _q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         (_r2(F.col("tok_sum")) / F.col("tok_count")).alias("v"),
     )
     work = tempfile.mkdtemp(prefix="rts_sewma_")
-    in_dir, ckpt = f"{work}/in", f"{work}/ckpt"
+    in_dir = f"{work}/in"
     try:
         bounds = series.agg(F.min("t").alias("lo"), F.max("t").alias("hi")).collect()[0]
         half = (bounds["lo"] + bounds["hi"]) // 2
@@ -996,26 +1023,9 @@ def _q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, alpha=0.3, init_value=1.0,
             keys=["key"], order_col="t", value_col="v",
         )
-        # per-batch parquet appends instead of collecting every batch's
-        # rows to the driver: results stay JVM-side; the eager
-        # checkpoint below materializes them before the workdir is
-        # removed
-        res_dir = f"{work}/res"
-
-        def sink(batch_df, _bid):
-            batch_df.write.mode("append").parquet(res_dir)
-
-        q = (
-            out.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("streaming_ewma_1h did not drain within 600s")
-        res = spark.read.parquet(res_dir).localCheckpoint()
+        # per-batch parquet appends, eagerly checkpointed: results stay
+        # JVM-side instead of crossing the Python driver
+        res = streaming.drain_append(out, work, "streaming_ewma_1h")
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return res.select("key", "t", "v", _sci(F.col("psi")).alias("ewma"))
@@ -2601,7 +2611,9 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_dedup_stream_watermark_eviction."""
     import shutil
     import tempfile
+    import time
 
+    from rust_timeseries_spark import streaming
     from rust_timeseries_spark.streaming import dedup_stream
 
     ev = _events(spark, sf_dir)
@@ -2610,31 +2622,29 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", es.alias("t"), "value"
     )
     work = tempfile.mkdtemp(prefix="rts_sdedup_")
-    in_dir, ckpt = f"{work}/in", f"{work}/ckpt"
+    in_dir = f"{work}/in"
     try:
         mid = base.agg(((F.min("t") + F.max("t")) / 2).cast("long").alias("m")).collect()[0]["m"]
         # replay group 1: full copy; group 2: full copy again (every
-        # row a duplicate) + the early half a THIRD time. r6: each
-        # group is 4 part files written in parallel (the old
-        # coalesce(1) serialized a ~30 MB parquet write onto one task,
-        # twice); every file in a group gets the SAME forced mtime and
-        # maxFilesPerTrigger matches the group size, so the file
-        # source's (mtime, path) ordering still yields exactly one
-        # micro-batch per replay group — identical batch contents,
-        # state transitions and output.
+        # row a duplicate) + the early half a THIRD time. Each group is
+        # n_parts files written in parallel (one file would serialize a
+        # ~30 MB write onto one task at sf1), all stamped with the
+        # group's mtime, and maxFilesPerTrigger = n_parts, so the file
+        # source's (mtime, path) order replays one micro-batch per group
+        # — only if every group wrote exactly n_parts files, hence the
+        # check. repartition, not coalesce: the single-row-group input
+        # scans as one non-empty partition, so coalesce wrote one file.
         n_parts = 4
-        base.coalesce(n_parts).write.mode("append").parquet(in_dir)
-        first = {f for f in os.listdir(in_dir) if f.endswith(".parquet")}
-        base.unionByName(base.where(F.col("t") < mid)).coalesce(n_parts).write.mode("append").parquet(in_dir)
-        first_mt = max(os.path.getmtime(os.path.join(in_dir, f)) for f in first)
-        for f in os.listdir(in_dir):
-            p = os.path.join(in_dir, f)
-            if not f.endswith(".parquet"):
-                continue
-            if f in first:
-                os.utime(p, (first_mt, first_mt))
-            else:
-                os.utime(p, (first_mt + 10.0, first_mt + 10.0))
+        written: set[str] = set()
+        t0 = time.time()
+        for k, g in enumerate((base, base.unionByName(base.where(F.col("t") < mid)))):
+            g.repartition(n_parts).write.mode("append").parquet(in_dir)
+            new = {f for f in os.listdir(in_dir) if f.endswith(".parquet")} - written
+            if len(new) != n_parts:
+                raise AssertionError(f"replay group wrote {len(new)} files, expected {n_parts}")
+            for f in new:
+                os.utime(os.path.join(in_dir, f), (t0 + 10.0 * k, t0 + 10.0 * k))
+            written |= new
         stream = (
             spark.readStream.schema(base.schema)
             .option("maxFilesPerTrigger", n_parts).parquet(in_dir)
@@ -2645,22 +2655,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # JVM-side per-batch parquet appends + eager checkpoint instead
         # of collecting every batch's rows through the Python driver
-        res_dir = f"{work}/res"
-
-        def sink(batch_df, _bid):
-            batch_df.write.mode("append").parquet(res_dir)
-
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("streaming_dedup did not drain within 600s")
-        res = spark.read.parquet(res_dir).localCheckpoint()
+        res = streaming.drain_append(deduped, work, "streaming_dedup")
     finally:
         shutil.rmtree(work, ignore_errors=True)
     day = (F.col("t") - F.pmod(F.col("t"), F.lit(86400))).alias("day")
@@ -2996,7 +2991,7 @@ def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     TPC-H itself does with decimal columns). l_quantity is integral, so
     its float sum is exact at any order and stays on the rounded-double
     convention."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
+    li = _table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= F.lit("2025-09-01").cast("timestamp_ntz")
     )
     g = li.groupBy("l_returnflag", "l_linestatus").agg(
@@ -3026,9 +3021,9 @@ GROUP BY l_returnflag, l_linestatus
 def _q_orders_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily order rollup joined with the (broadcast) customer→nation→
     region dimension chain — the engine's J3 dimension-join pattern."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    o = _table(spark, sf_dir, "orders")
+    c = _table(spark, sf_dir, "customer")
+    n = _table(spark, sf_dir, "nation")
     dim = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
         "c_custkey", F.col("n_name").alias("nation")
     )
@@ -4322,9 +4317,9 @@ def _q_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts + smallest violating key."""
     from rust_timeseries_spark.operators import audit
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = _table(spark, sf_dir, "orders")
+    cust = _table(spark, sf_dir, "customer")
+    li = _table(spark, sf_dir, "lineitem")
     cust_holed = cust.where(F.pmod(F.col("c_custkey"), F.lit(97)) != 0)
     return audit.referential_audit([
         ("orders_without_customer", orders, cust_holed, "o_custkey", "c_custkey"),
@@ -4390,12 +4385,12 @@ def _q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an epoch comparison (TZ-independent). Revenue = per-row
     ``floor(extprice·(1−disc)·100 + 0.5)`` cents — the identical IEEE
     chain on both engines — summed exact and rendered DECIMAL(38,2)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet").where(F.col("r_name") == "ASIA")
+    li = _table(spark, sf_dir, "lineitem")
+    o = _table(spark, sf_dir, "orders")
+    c = _table(spark, sf_dir, "customer")
+    s = _table(spark, sf_dir, "supplier")
+    n = _table(spark, sf_dir, "nation")
+    r = _table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     # direct NTZ-literal comparison (pure wall-clock, TZ-free) — unlike
     # the epoch-arithmetic spelling, this is a plain column predicate
     # that reaches the parquet scan as a pushed filter (plan check 45

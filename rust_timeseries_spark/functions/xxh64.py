@@ -15,13 +15,16 @@ engine-native hashes (MinHash signatures, band buckets, SimHash bit
 votes) independently of the JVM.  ``tests/test_dataops.py`` pins
 equality against Spark's own ``F.xxhash64`` output.
 
-This is NOT a hot path — the engine always hashes JVM-side; Python-side
-hashing exists only for verification.
+The scalar functions are for verification only. ``hash_int_np`` is a
+hot path: the vectorised ``hashInt`` behind ``datagen.token_table``'s
+token arrays, run on the executors over whole Arrow batches.
 """
 
 from __future__ import annotations
 
 import struct
+
+import numpy as np
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -88,6 +91,24 @@ def xxh64(data: bytes, seed: int = 42) -> int:
     h = (h * _P3) & _M64
     h ^= h >> 32
     return h
+
+
+def hash_int_np(values: np.ndarray, seeds: np.ndarray) -> np.ndarray:
+    """Spark's ``XXH64.hashInt`` element-wise: the low 32 bits of each
+    of ``values`` hashed with the matching int64 of ``seeds``. Returns
+    signed int64, as Spark does. uint64 arithmetic wraps mod 2⁶⁴, which
+    is XXH64's own arithmetic."""
+    h = np.asarray(seeds, dtype=np.int64).view(np.uint64) + np.uint64(_P5 + 4)
+    h ^= (np.asarray(values, dtype=np.int64).view(np.uint64) & np.uint64(0xFFFFFFFF)) * np.uint64(_P1)
+    h = (h << np.uint64(23)) | (h >> np.uint64(41))
+    h *= np.uint64(_P2)
+    h += np.uint64(_P3)
+    h ^= h >> np.uint64(33)
+    h *= np.uint64(_P2)
+    h ^= h >> np.uint64(29)
+    h *= np.uint64(_P3)
+    h ^= h >> np.uint64(32)
+    return h.view(np.int64)
 
 
 def _to_signed(u: int) -> int:

@@ -30,6 +30,18 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 
 
+def _check_reserved(df: DataFrame) -> None:
+    """The operators below bind intermediates to ``_rts_*`` columns and
+    drop them before returning, so a caller column with that prefix
+    would be silently overwritten and then dropped: refuse it."""
+    clash = [c for c in df.columns if c.lower().startswith("_rts_")]
+    if clash:
+        raise ValueError(
+            f"columns {clash} use the '_rts_' prefix reserved for textops "
+            "intermediates; rename them before calling"
+        )
+
+
 def words_col(text: str | Column = "text") -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, " ")
@@ -38,6 +50,7 @@ def words_col(text: str | Column = "text") -> Column:
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace + regex token counts, distinct counts, type-token
     ratio. One projection, fully codegen'd."""
+    _check_reserved(df)
     bpe = F.expr(f"regexp_extract_all({text_col}, '{BPE_SPLIT_PATTERN}', 0)")
     words = F.col("_rts_ws")
     return (
@@ -54,6 +67,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic quality features + a composite score in [0, 1]:
     mean word length sanity, stopword ratio, alphabetic ratio,
     duplicate-word ratio. Pure column math."""
+    _check_reserved(df)
     # split bound once; every ratio below reads the attribute instead
     # of re-splitting (same arithmetic, same values)
     out = df.withColumn("_rts_ws", words_col(text_col))
@@ -91,6 +105,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     word multiset, pick the argmax (ties → lexicographic via the
     ordered greatest chain); 'und' (undetermined) when no lexicon hits.
     """
+    _check_reserved(df)
     # bind the split once (attribute, not re-split per lambda element)
     # and count each lexicon's hits with a set-membership predicate —
     # same multiset hit count as the array_contains scan, minus the
@@ -197,6 +212,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     computed exactly once per row; the arithmetic (and therefore every
     output value) is unchanged.
     """
+    _check_reserved(df)
     ws = "_rts_ws"
     out = df.withColumn(ws, words_col(text_col))
     n_ws = F.size(F.col(ws))
@@ -321,6 +337,7 @@ def quality_filter(
     *quality_filter* driver gate value-compares the per-(source,
     reason) attrition counts AND the kept token mass against DuckDB.
     """
+    _check_reserved(df)
     out = df.withColumn("_rts_ws", words_col(text_col))
     words = F.col("_rts_ws")
     n_words = F.size(words)
@@ -398,6 +415,7 @@ def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     O(m·distinct) per doc inside codegen, no (doc, char) explode and
     therefore no shuffle at any corpus size. Emits ``n_chars_total``,
     ``n_distinct_chars``, ``char_entropy``."""
+    _check_reserved(df)
     # r6 plan shape: bind chars / distinct / per-char counts to
     # intermediate columns. Inlined, the interpreted higher-order fold
     # re-evaluated ``split(text, '')`` per distinct char AND counted

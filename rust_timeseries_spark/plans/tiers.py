@@ -29,6 +29,7 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators import rollup
 
@@ -60,6 +61,9 @@ class TierStore:
         self.ts_col = ts_col
         self.value_col = value_col
         self.epoch = epoch
+        # schema of each tier as this store last wrote it, so reading it
+        # back needs no schema-inference job
+        self._schemas: dict[str, StructType] = {}
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # -- paths ---------------------------------------------------------------
@@ -98,9 +102,19 @@ class TierStore:
             if _PARTITION_COLS[tier]:
                 writer = writer.partitionBy(*_PARTITION_COLS[tier])
             writer.parquet(self.tier_path(tier))
+            self._schemas[tier] = out.schema
+
+    def _read(self, tier: str) -> DataFrame:
+        """The stored tier, partition column included. A tier this store
+        wrote is read with its written schema; one written elsewhere (a
+        store reopened over an existing path) has its schema inferred."""
+        reader = self.spark.read
+        if tier in self._schemas:
+            reader = reader.schema(self._schemas[tier])
+        return reader.parquet(self.tier_path(tier))
 
     def read_tier(self, tier: str) -> DataFrame:
-        df = self.spark.read.parquet(self.tier_path(tier))
+        df = self._read(tier)
         return df.drop("bucket_day") if "bucket_day" in df.columns else df
 
     # -- incremental maintenance --------------------------------------------
@@ -143,6 +157,7 @@ class TierStore:
                 # write shape as materialize_full (guide §6)
                 out = self._with_day(df).repartition("bucket_day")
                 out.write.mode("overwrite").partitionBy("bucket_day").parquet(self.tier_path(tier))
+                self._schemas[tier] = out.schema
             counts = obs.get
             day_rows = {d: counts[str(d)] for d in days if counts[str(d)]}
             t1d = rollup.fold_up(t1h, "1d", self.keys, epoch=self.epoch)
@@ -153,6 +168,7 @@ class TierStore:
             tmp = final + "_tmp"
             # one file: the 1d tier holds only |keys| × |days| rows
             t1d.coalesce(1).write.mode("overwrite").parquet(tmp)
+            self._schemas["1d"] = t1d.schema
         finally:
             t1m.unpersist(blocking=True)
         if os.path.exists(final):
@@ -218,7 +234,7 @@ class TierStore:
         that many writing tasks (review r4 — a plain
         ``repartition(N, "bucket_day")`` hashes a whole day to ONE task,
         so the parameter silently did nothing)."""
-        df = self.spark.read.parquet(self.tier_path(tier))
+        df = self._read(tier)
         tmp = self.tier_path(tier) + "_compact"
         n = max(1, int(target_files_per_partition))
         if _PARTITION_COLS[tier] and "bucket_day" in df.columns:

@@ -188,14 +188,20 @@ def test_dedup_stream_watermark_eviction(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     base_t = 1_700_000_000
 
+    t0 = time.time()
+
+    def parquet_files():
+        return {f for f in os.listdir(in_dir) if f.endswith(".parquet")} if os.path.isdir(in_dir) else set()
+
     def drop_file(rows, order):
+        # the file source replays oldest mtime first: stamp the file
+        # this write added (found by set difference, not by mtime, which
+        # the previous stamp has moved into the future) at t0 + order
+        before = parquet_files()
         df = spark.createDataFrame(rows, "event_id long, t long")
         df.coalesce(1).write.mode("append").parquet(in_dir)
-        files = sorted(
-            (os.path.join(in_dir, f) for f in os.listdir(in_dir) if f.endswith(".parquet")),
-            key=os.path.getmtime,
-        )
-        os.utime(files[-1], (time.time() + order, time.time() + order))
+        (new,) = parquet_files() - before
+        os.utime(os.path.join(in_dir, new), (t0 + order, t0 + order))
 
     # delay 10s. batch1: id=1 @t0 (watermark after batch: t0-10).
     # batch2: id=2 @t0+100 advances the watermark to t0+90, evicting
@@ -301,3 +307,16 @@ def test_stream_session_rollup_matches_batch(spark, tmp_path):
     assert got == want
     # the boundary behavior itself: k1 has exactly 2 sessions
     assert sum(1 for r in want if r[0] == "k1") == 2
+
+
+def test_drain_append_survives_zero_micro_batches(spark, tmp_path):
+    # an input directory with no files runs no micro-batch: the drain
+    # still returns an empty frame with the stream's schema
+    from rust_timeseries_spark import streaming
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    stream = spark.readStream.schema("event_id long, t long").parquet(str(in_dir))
+    res = streaming.drain_append(stream, str(tmp_path / "work"), "empty")
+    assert res.count() == 0
+    assert res.schema == spark.createDataFrame([], "event_id long, t long").schema

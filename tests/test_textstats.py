@@ -243,3 +243,15 @@ def test_char_entropy_known_values(spark):
     assert abs(got[1]["char_entropy"] - 1.0) < 1e-12
     assert abs(got[2]["char_entropy"] - 2.0) < 1e-12
     assert got[2]["n_chars_total"] == 4 and got[2]["n_distinct_chars"] == 4
+
+
+@pytest.mark.parametrize("op", [
+    textops.with_token_counts, textops.with_quality_score, textops.with_lang_id,
+    textops.with_repetition_stats, textops.quality_filter, textops.with_char_entropy,
+])
+def test_textops_refuse_reserved_columns(spark, op):
+    # the operators bind and then drop _rts_* intermediates; a caller
+    # column of that name would be overwritten and dropped
+    df = spark.createDataFrame([(1, "a b c", "mine")], "doc_id long, text string, _RTS_ws string")
+    with pytest.raises(ValueError, match="_rts_"):
+        op(df)

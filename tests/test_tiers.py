@@ -6,9 +6,8 @@ from rust_timeseries_spark import datagen
 from rust_timeseries_spark.plans.pipeline import RollupPipeline
 from rust_timeseries_spark.plans.tiers import TierStore
 
-#: jobs the append ``run_increment`` below may launch (32 before the
-#: dirty days' cascade was shared and the meta tables got fixed schemas)
-JOBS_PER_APPEND = 21
+#: jobs the append ``run_increment`` below may launch
+JOBS_PER_APPEND = 20
 
 
 @pytest.fixture()
@@ -60,6 +59,37 @@ def test_incremental_equals_full_timestamp_store(spark, raw, tmp_path):
     # epoch=False: bucket_ts is a timestamp, and the 1d rebuild's day
     # filter must still match the replaced day partitions
     _check_incremental_equals_full(TierStore(spark, str(tmp_path / "tiers_ts"), epoch=False), raw)
+
+
+def _jobs_of(spark, group, fn):
+    """Run ``fn`` under its own job group; its result and job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("epoch", [True, False])
+def test_read_tier_uses_written_schema(spark, raw, tmp_path, epoch):
+    # a tier this store wrote reads back with its written schema: no
+    # schema-inference job, and the same schema and rows as the inferred
+    # read of a store reopened over the same path
+    path = str(tmp_path / f"tiers_{epoch}")
+    store = TierStore(spark, path, epoch=epoch)
+    store.materialize_full(raw)
+    day = _raw_day(raw)
+    last = raw.select(F.max(day)).collect()[0][0]
+    store.merge_increment(raw, raw.where(day == last))
+    reopened = TierStore(spark, path, epoch=epoch)
+    for tier in ("1m", "1h", "1d"):
+        got, jobs = _jobs_of(spark, f"read-{epoch}-{tier}", lambda: store.read_tier(tier))
+        assert jobs == [], tier
+        inferred = reopened.read_tier(tier)
+        assert got.schema == inferred.schema, tier
+        assert got.exceptAll(inferred).count() == 0 and inferred.exceptAll(got).count() == 0, tier
 
 
 def test_merge_keeps_1d_rows_of_expired_days(spark, raw, tmp_path):
